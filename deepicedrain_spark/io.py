@@ -143,10 +143,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES if os.path.exists(table_path(sf_dir, name))}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] | None = None
 ) -> None:
@@ -183,11 +179,6 @@ def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
         .option("nullValue", "NaN")
         .csv(path)
     )
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (SURVEY S7 geometry sink uses this shape)."""
-    df.write.mode(mode).json(path)
 
 
 def read_csv(

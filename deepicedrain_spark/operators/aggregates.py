@@ -121,12 +121,6 @@ def raster_aggregate(
     return df.groupBy(cx, cy).agg(*zagg)
 
 
-def distinct_count_locations(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A8: count distinct (x, y) locations (reference
-    atlxi_xover.py:161-165 ``len(df.groupby(['x','y']))``)."""
-    return df.agg(F.count_distinct(*[F.col(c) for c in cols]).alias("n_locations"))
-
-
 def grouped_trend(df: DataFrame, group_cols: list[str], y: str, x: str, scale: float = 1.0) -> DataFrame:
     """A12: per-group least-squares slope × scale (reference
     vizplots.py:413-418 ``np.polyfit(deg=1)`` per crossover group)."""

@@ -1175,6 +1175,71 @@ def semantic_decontamination(
     )
 
 
+def semantic_decontamination_gate(
+    corpus: DataFrame,
+    benchmark: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.95,
+) -> DataFrame:
+    """Map-side form of :func:`semantic_decontamination` for a corpus
+    that may be a STREAM (the ingest gate): same output rows, no
+    shuffle on the corpus side, no state.
+
+    The benchmark collapses into ONE broadcast row — a sorted array of
+    (bench_id, vector, norm) structs — joined to every corpus row (a
+    stream–static join). One lambda scores the row against every
+    benchmark entry, so the expression does not grow with the
+    benchmark size. Norm and dot are the same left-to-right folds the
+    batch operator runs, so every round-6 cosine is bit-identical to
+    it. The broadcast row bounds the benchmark to eval-set size
+    (10³–10⁵ vectors), like the batch form.
+    """
+    from deepicedrain_spark.operators.similarity import dot_sql, norm2_expr
+
+    bench = F.broadcast(
+        benchmark.select(
+            F.col(id_col).alias("bench_id"),
+            F.col(vec_col).cast("array<double>").alias("bv"),
+        )
+        .withColumn("bn", norm2_expr("bv"))
+        .agg(F.sort_array(F.collect_list(F.struct("bench_id", "bv", "bn"))).alias("_bench"))
+    )
+    scored = (
+        corpus.select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+        )
+        .withColumn("_n", norm2_expr("_v"))
+        .crossJoin(bench)
+        .select(
+            "_id",
+            # one-element explode = a Generate fence: a filter on a
+            # projected _hits would be pushed into the join condition,
+            # scoring every row twice; above a Generate it stays put
+            F.explode(
+                F.array(
+                    F.expr(
+                        "filter(transform(_bench, b -> named_struct("
+                        f"'cos', round({dot_sql('_v', 'b.bv')} / sqrt(_n * b.bn), 6),"
+                        " 'nid', -b.bench_id)),"
+                        f" c -> c.cos >= {float(threshold)!r}D)"
+                    )
+                )
+            ).alias("_hits"),
+        )
+    )
+    # strongest match: max (cos, -bench_id) — highest cosine, smaller
+    # bench id on round-6 ties (the batch operator's window order)
+    best = F.array_max("_hits")
+    return scored.where(F.size("_hits") > 0).select(
+        F.col("_id").alias(id_col),
+        F.size("_hits").cast("long").alias("n_bench_hits"),
+        (-best["nid"]).cast("bigint").alias("bench_id"),
+        best["cos"].alias("cos"),
+    )
+
+
 def embedding_near_duplicates_lsh(
     emb: DataFrame,
     id_col: str = "vec_id",

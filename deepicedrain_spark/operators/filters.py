@@ -44,13 +44,6 @@ def null_threshold(df: DataFrame, group_cols: list[str], value_col: str, thresh:
     )
 
 
-def null_threshold_wide(df: DataFrame, cols: list[str], thresh: int = 2) -> DataFrame:
-    """P6 (wide form): ≥ thresh non-null among suffixed columns —
-    map-only, no shuffle (preferred at scale when data is wide)."""
-    nvalid = sum(F.when(F.col(c).isNotNull(), 1).otherwise(0) for c in cols)
-    return df.filter(nvalid >= F.lit(thresh))
-
-
 def clip_to_sigma(df: DataFrame, col: str, k: float = 3.0, out_col: str | None = None) -> DataFrame:
     """P8: clip to mean ± k·std (reference atlxi_lake.py:115-120).
 

@@ -19,12 +19,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dot_expr(a: str, b: str) -> Column:
-    """Σ aᵢ·bᵢ in double (left-to-right fold — reproducible)."""
-    return F.expr(
+def dot_sql(a: str, b: str) -> str:
+    """Σ aᵢ·bᵢ in double (left-to-right fold — reproducible), as SQL
+    text so it can sit inside a larger lambda."""
+    return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
         f"cast(0.0 as double), (acc, v) -> acc + v)"
     )
+
+
+def dot_expr(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
 
 
 def norm2_expr(a: str) -> Column:

@@ -23,7 +23,7 @@ from deepicedrain_spark.operators.crossover import (
     crossover_join,
     track_segments,
 )
-from deepicedrain_spark.operators.windows import anomaly_vs_first, ice_volume_over_time
+from deepicedrain_spark.operators.windows import anomaly_vs_first
 
 MAX_GAP_M = 250.0  # x2sys -Wd250e (X2SYS/ICESAT2.tag:6)
 SECONDS_PER_YEAR = 365.25 * 86400
@@ -89,18 +89,4 @@ def crossover_height_series(xovers: DataFrame) -> DataFrame:
         partition_by=["track1_track2"],
         tiebreak=["x"],
         out="h_anom",
-    )
-
-
-def lake_volume_series(
-    height_series: DataFrame, surface_area_m2: float, rolling_days: int = 91
-) -> DataFrame:
-    """W5 chain over the crossover anomalies (atlxi_xover.py:298-303 →
-    lake_algorithms.py:76-227)."""
-    return ice_volume_over_time(
-        height_series,
-        F.col("t") * 1_000_000,
-        "h_anom",
-        surface_area_m2=surface_area_m2,
-        rolling_days=rolling_days,
     )

@@ -19,6 +19,8 @@ occurrence wins, emitted immediately).
 from __future__ import annotations
 
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -132,20 +134,36 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_to_batch(stream_df: DataFrame, output_mode: str, state_partitions: int = 8) -> DataFrame:
-    """Execute a (bounded) streaming plan to completion via
-    Trigger.AvailableNow into a memory sink; return the result table.
+@contextmanager
+def pinned_conf(
+    spark: SparkSession, state_partitions: int = 8, extra: dict[str, str] | None = None
+) -> Iterator[None]:
+    """Pin Spark conf keys for a stream's lifetime and restore the
+    previous values afterwards, on failure too.
 
-    The stateful-operator partition count is pinned (and restored) for
-    the query's lifetime: every shuffle partition materializes a state
+    ``spark.sql.shuffle.partitions`` is always pinned (to
+    ``state_partitions``): every shuffle partition materializes a state
     store per micro-batch, so a bounded replay wants a handful, not the
     batch engine's fan-out. Unbounded production streams should size
-    this to their key cardinality instead."""
+    this to their key cardinality instead. ``extra`` pins further keys."""
+    conf = {"spark.sql.shuffle.partitions": str(state_partitions), **(extra or {})}
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def run_to_batch(stream_df: DataFrame, output_mode: str, state_partitions: int = 8) -> DataFrame:
+    """Execute a (bounded) streaming plan to completion via
+    Trigger.AvailableNow into a memory sink; return the result table
+    (state partitions pinned by :func:`pinned_conf`)."""
     spark = stream_df.sparkSession
     name = f"s_{uuid.uuid4().hex[:12]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with pinned_conf(spark, state_partitions):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -154,8 +172,6 @@ def run_to_batch(stream_df: DataFrame, output_mode: str, state_partitions: int =
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -217,16 +233,19 @@ def sliding_means(
     )
 
 
-def stateful_dedup(events: DataFrame, keys: list[str], watermark_minutes: int = 60) -> DataFrame:
+def stateful_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
     """Streaming GLOBAL dedup: the first occurrence of each key ever
-    seen wins. State is one row per DISTINCT KEY and is NOT evicted by
-    the watermark (Spark only cleans dropDuplicates state when the
-    event-time column is part of the key subset, which would change the
-    semantics) — so state is bounded by key cardinality, not time.
-    That is the right contract when keys are entities (users, docs);
-    for time-windowed dedup on an unbounded stream use
-    stateful_dedup_within_watermark below."""
-    return events.withWatermark("event_time", f"{watermark_minutes} minutes").dropDuplicates(keys)
+    seen wins. State is one row per DISTINCT KEY, kept forever — bounded
+    by key cardinality, not time. That is the right contract when keys
+    are entities (users, docs); for time-windowed dedup on an unbounded
+    stream use stateful_dedup_within_watermark below.
+
+    No watermark: Spark evicts dropDuplicates state only when the
+    event-time column is part of the key subset (which would change the
+    semantics), and it drops late rows only then too, so a watermark
+    here would change nothing but add a no-data micro-batch after every
+    availableNow run to advance it."""
+    return events.dropDuplicates(keys)
 
 
 def stateful_dedup_within_watermark(

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deepicedrain_spark.streaming.windows import (
+    pinned_conf,
     read_events_stream,
     run_to_batch,
     running_anomaly,
@@ -449,9 +450,7 @@ def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(bdf: DataFrame, _bid: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark):
         q = (
             agg.writeStream.outputMode("complete")
             .foreachBatch(write_batch)
@@ -459,8 +458,6 @@ def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.read.parquet(out_dir)
 
 
@@ -501,9 +498,7 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts").cast("decimal(38,0)") / 1000).cast("long").alias("t_us"),
         "event_id",
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark):
         q = (
             events.writeStream.foreachBatch(
                 upsert_sink(spark, out_dir, ["user_id"], ["t_us", "event_id"])
@@ -513,8 +508,6 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return read_upsert_table(spark, out_dir).select(
         "user_id", F.col("value").alias("last_value"), F.col("t_us").alias("last_us")
     )
@@ -718,19 +711,17 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a redelivered micro-batch a no-op instead of a double append
         append_records_once(path, {"n": gn[None, :], "cents": gc[None, :]}, bid)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            cells.writeStream.outputMode("append")
-            .foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", f"{path}_ckpt_{key}")
-            .start()
-        )
-        q.awaitTermination()
+        with pinned_conf(spark):
+            q = (
+                cells.writeStream.outputMode("append")
+                .foreachBatch(write_batch)
+                .trigger(availableNow=True)
+                .option("checkpointLocation", f"{path}_ckpt_{key}")
+                .start()
+            )
+            q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         import shutil
 
         shutil.rmtree(f"{path}_ckpt_{key}", ignore_errors=True)
@@ -798,9 +789,7 @@ def q_streaming_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, out_dir, bdf, bid, ["user_id"], ["t_us", "event_id"], n_buckets=16
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with pinned_conf(spark):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
@@ -808,8 +797,6 @@ def q_streaming_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return read_upsert_table_bucketed(spark, out_dir).select(
         "user_id", F.col("value").alias("last_value"), F.col("t_us").alias("last_us")
     )
@@ -901,15 +888,11 @@ def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(feed)
     )
     gate = near_dup_gate(spark, state, threshold=0.8)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     # AQE re-plans after every shuffle — ~1 s/batch of fixed cost on
     # these kilobyte exchanges (min-of-4: 13.7 s with, 9.7 s without
     # at sf0.1). Leave it ON for production batch sizes; the demo's
     # micro-batches are below its break-even.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with pinned_conf(spark, extra={"spark.sql.adaptive.enabled": "false"}):
         q = (
             stream.writeStream.foreachBatch(gate)
             .option("checkpointLocation", ckpt)
@@ -917,9 +900,6 @@ def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     return read_gate_result(spark, state)
 
 
@@ -991,15 +971,15 @@ def q_streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_batch(gated, "append").orderBy("doc_id")
 
 
-# Streaming SEMANTIC decontamination gate (round 12): the ingest-side
-# twin of semantic_decontamination (suite_retrieval) exactly as
+# Streaming SEMANTIC decontamination gate: the ingest-side twin of
+# semantic_decontamination (suite_retrieval) exactly as
 # streaming_decontamination twins ngram_decontamination — block a doc
 # the moment it arrives if its embedding lands within cos >= t of ANY
-# benchmark vector. The benchmark is eval-set-sized, so its vectors
-# fold into the stream projection as LITERAL arrays (the
-# kmeans-centroid bounded-model pattern: 30 x 64 doubles of driver
-# state): per-row work is 30 codegen cosine trees + an array filter —
-# map-side, append mode, no state, no shuffle. Stream-final == batch
+# benchmark vector. The benchmark is eval-set-sized, so it stays a
+# static DataFrame broadcast as ONE row (operators.dedup.
+# semantic_decontamination_gate): a stream–static join scored by one
+# lambda per row — map-side, append mode, no state, no driver collect,
+# and the plan does not grow with the benchmark. Stream-final == batch
 # exactly (stateless map + filter), so the batch SQL is the oracle
 # verbatim (one definition, both contracts in sync).
 def _semantic_decon_oracle() -> str:
@@ -1013,83 +993,21 @@ def q_streaming_semantic_decontamination(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from deepicedrain_spark.io import load_table
-    from deepicedrain_spark.operators.similarity import dot_expr, norm2_expr
+    from deepicedrain_spark.operators.dedup import semantic_decontamination_gate
     from deepicedrain_spark.streaming.windows import _stream_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
-    bench = (
-        emb.filter(F.col("vec_id") < 30)
-        .select(
-            "vec_id",
-            F.expr(
-                "transform(embedding, (x, i) -> cast(x as double)"
-                " + 0.05D * (((i + 1) % 3) - 1))"
-            ).alias("bv"),
-        )
-        .collect()
-    )  # benchmark-sized driver state, literal-folded below
-
+    bench = emb.filter(F.col("vec_id") < 30).select(
+        "vec_id",
+        F.expr(
+            "transform(embedding, (x, i) -> cast(x as double)"
+            " + 0.05D * (((i + 1) % 3) - 1))"
+        ).alias("embedding"),
+    )
     stream = spark.readStream.schema(emb.schema).parquet(
         _stream_dir(sf_dir, "embeddings")
     )
-    # stream-row norm folds ONCE per row (column _n) instead of once
-    # per BENCHMARK literal inside every cosine; the benchmark-side
-    # norm is an aggregate over a literal array, which constant-folds.
-    # sqrt(_n * <folded const>) is the identical IEEE product the
-    # fused cosine computed, so the round-6 value is bit-unchanged
-    # (r12 opt, cosine_topk recipe).
-    corpus = stream.select(
-        "vec_id",
-        F.expr("transform(embedding, x -> cast(x as double))").alias("_v"),
-    ).withColumn("_n", norm2_expr("_v"))
-    def _lit_vec(vals) -> str:
-        # shortest-repr decimal literals cast to double round-trip to
-        # the exact same IEEE value the dot fold consumes
-        return (
-            "array("
-            + ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in vals)
-            + ")"
-        )
-
-    def _py_norm2(vals) -> float:
-        # the SAME left-to-right fold norm2_expr runs in the JVM
-        # (acc = 0.0; acc += x*x in element order, all float64), so
-        # the literal is bit-identical to the folded expression
-        acc = 0.0
-        for x in vals:
-            acc = acc + float(x) * float(x)
-        return acc
-
-    cand = F.array(
-        *[
-            F.struct(
-                F.round(
-                    dot_expr("_v", _lit_vec(r["bv"]))
-                    / F.sqrt(F.col("_n") * F.lit(_py_norm2(r["bv"]))),
-                    6,
-                ).alias("cos"),
-                F.lit(int(r["vec_id"])).alias("bench_id"),
-            )
-            for r in sorted(bench, key=lambda r: r["vec_id"])
-        ]
-    )
-    hits = F.filter(cand, lambda c: c["cos"] >= F.lit(0.9))
-    # strongest match: max (cos, -bench_id) struct — highest cosine,
-    # smaller bench id on round-6 ties
-    best = F.array_max(
-        F.transform(
-            hits, lambda c: F.struct(c["cos"].alias("cos"), (-c["bench_id"]).alias("nid"))
-        )
-    )
-    gated = (
-        corpus.select(
-            "vec_id",
-            F.size(hits).cast("long").alias("n_bench_hits"),
-            (-best["nid"]).cast("bigint").alias("bench_id"),
-            best["cos"].alias("cos"),
-        )
-        .filter(F.col("n_bench_hits") > 0)
-    )
+    gated = semantic_decontamination_gate(stream, bench, threshold=0.9)
     return run_to_batch(gated, "append").orderBy("vec_id")
 
 

@@ -295,6 +295,19 @@ def test_scd2_apply_dedups_duplicate_update_keys(spark):
     assert per_key == {1: "c", 2: "y"}  # highest attr wins
 
 
+def test_scd2_row_rejects_wrong_column_count(spark):
+    """The positional row layout is checked with a ValueError, which
+    survives ``python -O`` (an assert would be stripped and zip would
+    silently drop the surplus columns)."""
+    import pytest
+
+    from deepicedrain_spark.operators.cdc import _scd2_row
+
+    cols = [F.col("k"), F.col("attr"), F.col("valid_from")]  # valid_to missing
+    with pytest.raises(ValueError, match="expects 4 columns .* got 3"):
+        _scd2_row(cols, "k", ["attr"])
+
+
 def test_bloom_probe_handles_duplicate_probe_ids(spark):
     """Review finding r4: a duplicated probe id must not produce a
     false NEGATIVE (sum-of-hits was compared against the constant k)."""

@@ -389,3 +389,120 @@ def test_near_dup_gate_replay_idempotent(spark, tmp_path):
         tuple(r) for r in read_gate_result(spark, state).collect()
     )}
     assert final[5] == (False, 0)
+
+
+# --- stateless semantic decontamination gate -----------------------------
+def _gate_vectors(spark):
+    """Seeded 8-d corpus plus a benchmark of perturbed corpus rows: a
+    bench pair with equal vectors (round-6 cosine ties -> smaller id
+    wins), rows hitting several bench vectors, and clean rows."""
+    import random
+
+    rnd = random.Random(7)
+    corpus = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+    bench = [(100 + i, [x + rnd.uniform(-0.1, 0.1) for x in corpus[i * 3][1]])
+             for i in range(8)]
+    bench.append((200, list(bench[0][1])))  # exact twin of bench 100
+    schema = "vec_id long, embedding array<double>"
+    return spark.createDataFrame(corpus, schema), spark.createDataFrame(bench, schema)
+
+
+def _vector_stream(spark, corpus, d):
+    """The corpus as two parquet files -> two micro-batches."""
+    base = time.time() - 1000
+    for b in range(2):
+        _write_batch(spark, d, f"b{b}", corpus.filter(F.col("vec_id") % 2 == b).collect(),
+                     base + 100 * b, "vec_id long, embedding array<double>",
+                     ["vec_id", "embedding"])
+    return (
+        spark.readStream.schema("vec_id long, embedding array<double>")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d + "/*")
+    )
+
+
+def test_semantic_gate_stream_equals_batch(spark, tmp_path):
+    from deepicedrain_spark.operators.dedup import (
+        semantic_decontamination,
+        semantic_decontamination_gate,
+    )
+
+    corpus, bench = _gate_vectors(spark)
+    stream = _vector_stream(spark, corpus, str(tmp_path / "vec"))
+    got = run_to_batch(semantic_decontamination_gate(stream, bench, threshold=0.9), "append")
+    want = semantic_decontamination(corpus, bench, threshold=0.9)
+    assert got.schema == want.schema
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert len(rows) < corpus.count()  # clean rows pass the gate
+    assert any(n > 1 for _, n, _, _ in rows)
+    assert rows[0][:3] == (0, 2, 100)  # round-6 tie with twin bench 200 -> 100
+
+
+def _expression_count(df) -> int:
+    """Expression nodes over every operator of the analyzed plan."""
+    def n_expr(e):
+        ch = e.children()
+        return 1 + sum(n_expr(ch.apply(i)) for i in range(ch.size()))
+
+    def n_plan(p):
+        ex, ch = p.expressions(), p.children()
+        return (sum(n_expr(ex.apply(i)) for i in range(ex.size()))
+                + sum(n_plan(ch.apply(i)) for i in range(ch.size())))
+
+    return n_plan(df._jdf.queryExecution().analyzed())
+
+
+def test_semantic_gate_plan_does_not_grow_with_benchmark(spark, tmp_path):
+    from deepicedrain_spark.operators.dedup import semantic_decontamination_gate
+
+    corpus, _ = _gate_vectors(spark)
+    stream = _vector_stream(spark, corpus, str(tmp_path / "vec"))
+    counts = []
+    for n in (5, 30):
+        bench = corpus.filter(F.col("vec_id") < n)
+        assert bench.count() == n
+        counts.append(_expression_count(
+            semantic_decontamination_gate(stream, bench, threshold=0.9)))
+    assert counts[0] == counts[1] > 0
+
+
+# --- stateful dedup --------------------------------------------------------
+def test_stateful_dedup_late_new_key_two_batches(spark, tmp_path):
+    """Global dedup over two files: a row 10 h older than everything
+    seen so far, carrying a new key, is still emitted; the output is
+    batch DISTINCT; and one micro-batch runs per file (no extra
+    no-data batch)."""
+    from deepicedrain_spark.streaming.windows import pinned_conf, stateful_dedup
+
+    d = str(tmp_path / "dd")
+    base = time.time() - 1000
+    cols = ["user_id", "event_type", F.timestamp_micros("t_us").alias("event_time")]
+    schema = "user_id long, event_type string, t_us long"
+    _write_batch(spark, d, "b1", [(1, "click", _ts(600)), (2, "view", _ts(610)),
+                                  (1, "click", _ts(620))], base, schema, cols)
+    _write_batch(spark, d, "b2", [(3, "click", _ts(10)), (2, "view", _ts(700)),
+                                  (1, "view", _ts(705))], base + 100, schema, cols)
+    stream = (
+        spark.readStream.schema("user_id long, event_type string, event_time timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d + "/*")
+    )
+    name = "dedup_two_files"
+    with pinned_conf(spark):
+        q = (
+            stateful_dedup(stream, ["user_id", "event_type"])
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    got = sorted((r["user_id"], r["event_type"]) for r in spark.table(name).collect())
+    want = sorted(
+        (r["user_id"], r["event_type"])
+        for r in spark.read.parquet(d + "/*").select("user_id", "event_type").distinct().collect()
+    )
+    assert got == want == [(1, "click"), (1, "view"), (2, "view"), (3, "click")]
+    assert len(q.recentProgress) == 2

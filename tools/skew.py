@@ -18,9 +18,10 @@ PRIORITY queries against /root/testdata/sf0.1)
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 THRESHOLD = 8.0
 MIN_MAX_BYTES = 8 * 1024 * 1024  # ignore skew below 8 MiB max-task
