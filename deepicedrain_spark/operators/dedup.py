@@ -1186,11 +1186,12 @@ def semantic_decontamination_gate(
     that may be a STREAM (the ingest gate): same output rows, no
     shuffle on the corpus side, no state.
 
-    The benchmark collapses into ONE broadcast row — a sorted array of
+    The benchmark collapses into ONE broadcast row — an array of
     (bench_id, vector, norm) structs — joined to every corpus row (a
     stream–static join). One lambda scores the row against every
     benchmark entry, so the expression does not grow with the
-    benchmark size. Norm and dot are the same left-to-right folds the
+    benchmark size; the result reads only the hit count and the max
+    hit, so the array's order does not matter. Norm and dot are the same left-to-right folds the
     batch operator runs, so every round-6 cosine is bit-identical to
     it. The broadcast row bounds the benchmark to eval-set size
     (10³–10⁵ vectors), like the batch form.
@@ -1203,7 +1204,7 @@ def semantic_decontamination_gate(
             F.col(vec_col).cast("array<double>").alias("bv"),
         )
         .withColumn("bn", norm2_expr("bv"))
-        .agg(F.sort_array(F.collect_list(F.struct("bench_id", "bv", "bn"))).alias("_bench"))
+        .agg(F.collect_list(F.struct("bench_id", "bv", "bn")).alias("_bench"))
     )
     scored = (
         corpus.select(

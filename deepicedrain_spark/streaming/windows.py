@@ -134,19 +134,16 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@contextmanager
-def pinned_conf(
-    spark: SparkSession, state_partitions: int = 8, extra: dict[str, str] | None = None
-) -> Iterator[None]:
-    """Pin Spark conf keys for a stream's lifetime and restore the
-    previous values afterwards, on failure too.
+# Every shuffle partition materializes a state store per micro-batch,
+# so a bounded replay wants a handful, not the batch engine's fan-out.
+# Unbounded production streams should size this to their key cardinality.
+STATE_CONF = {"spark.sql.shuffle.partitions": "8"}
 
-    ``spark.sql.shuffle.partitions`` is always pinned (to
-    ``state_partitions``): every shuffle partition materializes a state
-    store per micro-batch, so a bounded replay wants a handful, not the
-    batch engine's fan-out. Unbounded production streams should size
-    this to their key cardinality instead. ``extra`` pins further keys."""
-    conf = {"spark.sql.shuffle.partitions": str(state_partitions), **(extra or {})}
+
+@contextmanager
+def pinned_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Pin Spark conf keys for a stream's lifetime and restore the
+    previous values afterwards, on failure too."""
     prev = {k: spark.conf.get(k) for k in conf}
     for k, v in conf.items():
         spark.conf.set(k, v)
@@ -157,13 +154,13 @@ def pinned_conf(
             spark.conf.set(k, v)
 
 
-def run_to_batch(stream_df: DataFrame, output_mode: str, state_partitions: int = 8) -> DataFrame:
+def run_to_batch(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Execute a (bounded) streaming plan to completion via
     Trigger.AvailableNow into a memory sink; return the result table
-    (state partitions pinned by :func:`pinned_conf`)."""
+    (conf pinned to :data:`STATE_CONF`)."""
     spark = stream_df.sparkSession
     name = f"s_{uuid.uuid4().hex[:12]}"
-    with pinned_conf(spark, state_partitions):
+    with pinned_conf(spark, STATE_CONF):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -240,11 +237,14 @@ def stateful_dedup(events: DataFrame, keys: list[str]) -> DataFrame:
     are entities (users, docs); for time-windowed dedup on an unbounded
     stream use stateful_dedup_within_watermark below.
 
-    No watermark: Spark evicts dropDuplicates state only when the
-    event-time column is part of the key subset (which would change the
-    semantics), and it drops late rows only then too, so a watermark
-    here would change nothing but add a no-data micro-batch after every
-    availableNow run to advance it."""
+    No watermark: it could not evict this state (Spark evicts
+    dropDuplicates state only when the event-time column is one of the
+    keys, which would change the semantics), but it did filter late
+    input. From the third micro-batch on (the late-row filter lags one
+    batch), a first occurrence more than the delay behind the watermark
+    was dropped, which diverges from the DISTINCT contract. Without it,
+    every new key is emitted, and availableNow runs lose the trailing
+    no-data batch that only advanced the watermark."""
     return events.dropDuplicates(keys)
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deepicedrain_spark.streaming.windows import (
+    STATE_CONF,
     pinned_conf,
     read_events_stream,
     run_to_batch,
@@ -450,7 +451,7 @@ def q_streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(bdf: DataFrame, _bid: int) -> None:
         bdf.write.mode("overwrite").parquet(out_dir)
 
-    with pinned_conf(spark):
+    with pinned_conf(spark, STATE_CONF):
         q = (
             agg.writeStream.outputMode("complete")
             .foreachBatch(write_batch)
@@ -498,7 +499,7 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts").cast("decimal(38,0)") / 1000).cast("long").alias("t_us"),
         "event_id",
     )
-    with pinned_conf(spark):
+    with pinned_conf(spark, STATE_CONF):
         q = (
             events.writeStream.foreachBatch(
                 upsert_sink(spark, out_dir, ["user_id"], ["t_us", "event_id"])
@@ -712,7 +713,7 @@ def q_streaming_netcdf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_records_once(path, {"n": gn[None, :], "cents": gc[None, :]}, bid)
 
     try:
-        with pinned_conf(spark):
+        with pinned_conf(spark, STATE_CONF):
             q = (
                 cells.writeStream.outputMode("append")
                 .foreachBatch(write_batch)
@@ -789,7 +790,7 @@ def q_streaming_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, out_dir, bdf, bid, ["user_id"], ["t_us", "event_id"], n_buckets=16
         )
 
-    with pinned_conf(spark):
+    with pinned_conf(spark, STATE_CONF):
         q = (
             events.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", ckpt)
@@ -892,7 +893,7 @@ def q_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # these kilobyte exchanges (min-of-4: 13.7 s with, 9.7 s without
     # at sf0.1). Leave it ON for production batch sizes; the demo's
     # micro-batches are below its break-even.
-    with pinned_conf(spark, extra={"spark.sql.adaptive.enabled": "false"}):
+    with pinned_conf(spark, {**STATE_CONF, "spark.sql.adaptive.enabled": "false"}):
         q = (
             stream.writeStream.foreachBatch(gate)
             .option("checkpointLocation", ckpt)

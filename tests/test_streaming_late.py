@@ -468,12 +468,14 @@ def test_semantic_gate_plan_does_not_grow_with_benchmark(spark, tmp_path):
 
 
 # --- stateful dedup --------------------------------------------------------
-def test_stateful_dedup_late_new_key_two_batches(spark, tmp_path):
-    """Global dedup over two files: a row 10 h older than everything
-    seen so far, carrying a new key, is still emitted; the output is
-    batch DISTINCT; and one micro-batch runs per file (no extra
-    no-data batch)."""
-    from deepicedrain_spark.streaming.windows import pinned_conf, stateful_dedup
+def test_stateful_dedup_late_new_key_one_batch_per_file(spark, tmp_path):
+    """Global dedup over three files: a row 10 h older than everything
+    seen so far, carrying a new key, arrives in the THIRD file. A 60-min
+    watermark's late-row filter lags one batch, so batch 3 would filter
+    at 9:20 (batch 1's max 10:20 minus the delay) and drop the row. It
+    is still emitted; the output is batch DISTINCT; and one micro-batch
+    runs per file (no extra no-data batch)."""
+    from deepicedrain_spark.streaming.windows import STATE_CONF, pinned_conf, stateful_dedup
 
     d = str(tmp_path / "dd")
     base = time.time() - 1000
@@ -481,15 +483,17 @@ def test_stateful_dedup_late_new_key_two_batches(spark, tmp_path):
     schema = "user_id long, event_type string, t_us long"
     _write_batch(spark, d, "b1", [(1, "click", _ts(600)), (2, "view", _ts(610)),
                                   (1, "click", _ts(620))], base, schema, cols)
-    _write_batch(spark, d, "b2", [(3, "click", _ts(10)), (2, "view", _ts(700)),
-                                  (1, "view", _ts(705))], base + 100, schema, cols)
+    _write_batch(spark, d, "b2", [(2, "view", _ts(700)), (1, "view", _ts(705))],
+                 base + 100, schema, cols)
+    _write_batch(spark, d, "b3", [(3, "click", _ts(10)), (1, "click", _ts(710))],
+                 base + 200, schema, cols)
     stream = (
         spark.readStream.schema("user_id long, event_type string, event_time timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(d + "/*")
     )
-    name = "dedup_two_files"
-    with pinned_conf(spark):
+    name = "dedup_three_files"
+    with pinned_conf(spark, STATE_CONF):
         q = (
             stateful_dedup(stream, ["user_id", "event_type"])
             .writeStream.outputMode("append")
@@ -505,4 +509,4 @@ def test_stateful_dedup_late_new_key_two_batches(spark, tmp_path):
         for r in spark.read.parquet(d + "/*").select("user_id", "event_type").distinct().collect()
     )
     assert got == want == [(1, "click"), (1, "view"), (2, "view"), (3, "click")]
-    assert len(q.recentProgress) == 2
+    assert len(q.recentProgress) == 3
